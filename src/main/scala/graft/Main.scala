@@ -410,22 +410,34 @@ object Main {
     * returned handle owns everything [[main]] blocks on. */
   def start(path: Path, spark0: Option[SparkSession] = None): Running = {
     val spark = spark0.getOrElse {
-      SparkSession.builder()
+      val s = SparkSession.builder()
         .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
         .appName("graft")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.extensions", "graft.query.RiemannExtensions")
         .getOrCreate()
+      // one state partition per core: every micro-batch opens and
+      // commits one RocksDB store per shuffle partition, so a width
+      // above the core count only adds task waves to the fixed
+      // per-batch cost. A stream's checkpoint records the width at its
+      // first start and keeps it on restart.
+      s.conf.set("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS",
+          s.sparkContext.defaultParallelism.toString))
+      s
     }
     // the index op runs on transformWithState, which needs a state
     // store with column families — RocksDB, the production store for
     // every stateful operator here (the HDFSBacked default cannot
     // serve it, and conf.getOption cannot distinguish "defaulted" from
-    // "explicitly chosen", so the process entry point just sets it)
+    // "explicitly chosen", so the process entry point just sets it).
+    // Changelog checkpointing makes each commit write a small changelog
+    // file; the maintenance thread uploads snapshots in the background.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
 
     val pubsub = new Sinks.Pubsub
     val index = new ServedIndex(spark)

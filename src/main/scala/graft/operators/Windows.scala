@@ -98,10 +98,7 @@ object Windows {
   private def emissionSpread(df: DataFrame, keys: Seq[String]): DataFrame =
     if (keys.isEmpty) df
     else {
-      val n = try df.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable =>
-        df.sparkSession.sparkContext.defaultParallelism }
+      val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       df.repartition(n, keys.map(col): _*)
     }
 

@@ -540,10 +540,8 @@ object Similarity {
     // duplication of two-long rows — noise against the verify
     // parallelism; at cluster scale the configured width is the properly
     // sized one.
-    val verifyWidth = try embeddings.sparkSession.conf
+    val verifyWidth = embeddings.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
-    catch { case _: Throwable =>
-      embeddings.sparkSession.sparkContext.defaultParallelism }
     val cand = capped.as("a")
       .join(capped.as("b"), col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") && idCond)

@@ -31,10 +31,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * architecture, and the shape a multi-receiver cluster deployment
   * would shard by port).
   *
-  * Flow control: when `capacity` frames are buffered, the reader
-  * threads block before reading the next frame, so TCP backpressure
-  * propagates to clients instead of OOMing the driver (the reference
-  * relies on netty's channel watermarks for the same thing).
+  * Flow control: when `capacity` frames are buffered and not yet
+  * handed to a planned batch, the reader threads block before reading
+  * the next frame, so TCP backpressure propagates to clients instead
+  * of OOMing the driver (the reference relies on netty's channel
+  * watermarks for the same thing). Planned frames wait only for the
+  * batch's commit, so the buffer stays under 2 × `capacity` frames.
   *
   * Delivery: frames are acked on receipt and kept until the batch
   * offset commits. An IN-PROCESS restart (query stop/start, a
@@ -111,8 +113,8 @@ object RiemannServers {
     * (core.clj:105-161) strengthened to "reload loses nothing". Only a
     * JVM crash still drops the in-memory tail (at-most-once across
     * process death; front with Kafka for replay). Memory is bounded by
-    * `capacity` frames per parked address, and an entry is consumed by
-    * the next bind.
+    * 2 × `capacity` frames per parked address, and an entry is consumed
+    * by the next bind.
     *
     * Contract: the successor is assumed to CONTINUE the predecessor's
     * checkpoint (a query restart / Core reload — the in-process paths
@@ -146,9 +148,10 @@ private[sources] class RiemannServerTable(options: CaseInsensitiveStringMap)
             port = options.getInt("port", 5555),
             maxFrame = options.getInt("maxframebytes", 16 * 1024 * 1024),
             // frames, not bytes: at the few-KB Msgs riemann clients
-            // send, ~32k frames bounds the buffer near a few hundred MB
-            // of driver heap — small enough that backpressure actually
-            // engages before memory pressure does
+            // send, ~32k unplanned frames (under 64k buffered) bound the
+            // buffer near a few hundred MB of driver heap — small enough
+            // that backpressure actually engages before memory pressure
+            // does
             capacity = options.getInt("capacity", 1 << 15),
             // TLS termination (reference transport/tcp.clj tls? path —
             // riemann's TLS is mutual by default; client auth is the
@@ -199,6 +202,12 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
     val p = RiemannServers.parked.remove(handoffKey)
     if (p != null) { frames ++= p._1; base = p._2; handoffAdopted = true }
   }
+  // end offset of the newest planned batch. Spark commits a batch only
+  // when it plans the next one, and it plans one only on new data: a
+  // bound on ALL buffered frames stalls ingest for good once one batch
+  // takes the whole buffer. So the bound counts the unplanned frames.
+  private var planned = 0L
+  private def unplanned: Long = base + frames.size - math.max(base, planned)
   @volatile private var running = true
   private val threads = new ArrayBuffer[Thread]()
   private val clients = new ArrayBuffer[Socket]()
@@ -245,6 +254,9 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
         spawn("riemann-tcp-accept") { () =>
           while (running) {
             val client = serverSocket.accept()
+            // one small ack per Msg: with Nagle on, an ack waits for the
+            // client's (delayed) TCP ACK of the previous one
+            client.setTcpNoDelay(true)
             clients.synchronized(clients += client)
             spawn(s"riemann-tcp-conn-${client.getPort}")(() => serve(client))
           }
@@ -316,7 +328,7 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
   }
 
   private def enqueue(payload: Array[Byte]): Unit = frames.synchronized {
-    while (running && frames.size >= capacity) frames.wait(100)
+    while (running && unplanned >= capacity) frames.wait(100)
     // a frame must not land (or be acked) after stop(): the stopped
     // buffer is never drained, so the ack would confirm a silent drop
     if (!running) throw new IOException("server stopped")
@@ -344,6 +356,8 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
     val slice = frames.synchronized {
       val from = math.max(0L, s - base).toInt
       val to = math.max(0L, math.min(e - base, frames.size.toLong)).toInt
+      planned = math.max(planned, e)
+      frames.notifyAll()
       frames.slice(from, to).toArray
     }
     if (slice.isEmpty) Array.empty

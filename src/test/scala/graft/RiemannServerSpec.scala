@@ -372,6 +372,56 @@ class RiemannServerSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a batch that takes the whole buffer does not stall ingest: a " +
+    "closed-loop client sends 10 × capacity frames and all arrive") {
+    val port = freePort()
+    val capacity = 16
+    val n = 10 * capacity
+    // the client fills the buffer between two triggers, so a batch
+    // plans all `capacity` frames at once; Spark commits that batch only
+    // when it plans the next, which needs a frame the full buffer would
+    // refuse
+    val q = spark.readStream.format("riemann-server")
+      .option("protocol", "tcp").option("host", "127.0.0.1")
+      .option("port", port.toString).option("capacity", capacity.toString)
+      .load()
+      .writeStream.format("memory").queryName("tcp_full_buffer")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      .outputMode("append").start()
+    val sock = connectRetry(port)
+    val acked = new java.util.concurrent.atomic.AtomicInteger()
+    val client = new Thread(() => {
+      try {
+        val out = new DataOutputStream(sock.getOutputStream)
+        val in = new DataInputStream(sock.getInputStream)
+        (0 until n).foreach { i =>
+          out.write(RiemannProtobuf.frame(RiemannProtobuf.encodeMsg(Seq(
+            pe("h", "full", "ok", i.toDouble, 1706000000L + i)))))
+          out.flush()
+          val len = in.readInt()
+          in.readFully(new Array[Byte](len))
+          acked.incrementAndGet()
+        }
+      } catch { case _: java.io.IOException => () } // closed below
+    }, "full-buffer-client")
+    client.setDaemon(true)
+    client.start()
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      while (spark.table("tcp_full_buffer").count() < n) {
+        assert(System.currentTimeMillis() < deadline,
+          s"ingest stalled: ${spark.table("tcp_full_buffer").count()} of " +
+            s"$n frames visible, ${acked.get()} acked")
+        Thread.sleep(100)
+      }
+      assert(acked.get() == n)
+    } finally {
+      sock.close()
+      q.stop()
+      client.join(10000)
+    }
+  }
+
   test("tls tcp server: mutual-TLS framed round trip; a plaintext " +
     "client is rejected without disturbing the stream " +
     "(transport_test.clj tls-test)") {
